@@ -602,11 +602,11 @@ def main() -> None:
         os.environ["SPARK_GRAFT_INDEX_CACHE"] = tempfile.mkdtemp(
             prefix="bench_fresh_cache_"
         )
-        # The one-time LAYOUT artifacts (the z-clustered events copy)
-        # live outside the disk-memo tier; redirect them too so a
-        # fresh pass pays the rewrite — otherwise src_zorder_read's
-        # dominant cost never appears in the build-inclusive regime
-        # (round-14 review finding).
+        # The one-time LAYOUT artifacts (the partitioned, z-clustered,
+        # evolved, bucketed and compacted copies) have their own root;
+        # redirect it too so a fresh pass pays the rewrites — otherwise
+        # e.g. src_zorder_read's dominant cost never appears in the
+        # build-inclusive regime (round-14 review finding).
         os.environ["SPARK_GRAFT_LAYOUT_CACHE"] = tempfile.mkdtemp(
             prefix="bench_fresh_layout_"
         )

@@ -23,6 +23,7 @@ from scala_reactivex_spark.functions.portable_hash import (
     mix31_duck_expr,
     mix31_spark_expr,
 )
+from scala_reactivex_spark.plans.memo import standing_artifact
 from scala_reactivex_spark.plans.registry import register
 from scala_reactivex_spark.sources.catalog import table
 
@@ -131,33 +132,22 @@ def repeat(spark: SparkSession, value, n: int) -> DataFrame:
 
 
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per fixture dir) a day-partitioned copy of events
-    under ``<repo>/.cache`` — the hive layout whose read side exercises
-    partition pruning, the mechanism that turns a 100 TB scan into a
-    read of only the matching partitions."""
-    import os
+    """Materialize (once per fixture content) a day-partitioned copy of
+    events as a standing layout — the hive layout whose read side
+    exercises partition pruning, the mechanism that turns a 100 TB scan
+    into a read of only the matching partitions."""
 
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    base = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(repo_root, ".cache", f"events_by_day_{base}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        ev = table(spark, sf_dir, "events")
-        (
-            ev.select(
-                "event_id",
-                "user_id",
-                "event_type",
-                "value",
-                "ms",
-                F.dayofmonth("tsm").alias("dom"),
-            )
-            .write.mode("overwrite")
-            .partitionBy("dom")
-            .parquet(out)
-        )
-    return out
+    def write(tmp: str) -> None:
+        table(spark, sf_dir, "events").select(
+            "event_id",
+            "user_id",
+            "event_type",
+            "value",
+            "ms",
+            F.dayofmonth("tsm").alias("dom"),
+        ).write.partitionBy("dom").parquet(tmp)
+
+    return standing_artifact(sf_dir, "events_by_day", write)
 
 
 @register(
@@ -965,34 +955,17 @@ def zorder_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _zordered_events(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per fixture dir) a Z-ORDER-CLUSTERED copy of
-    events under ``<repo>/.cache``: rows carry their normalized (u8, d8)
+    """Materialize (once per fixture content) a Z-ORDER-CLUSTERED copy of
+    events as a standing layout: rows carry their normalized (u8, d8)
     coordinates and land in hive directories keyed by their Morton
     z-bucket — the layout src_zorder_layout's audit scores, actually
     written so a reader can prune on it.  ``repartition(zbucket)`` keeps
-    the writer at one task per bucket (no small-file fan-out).
+    the writer at one task per bucket (no small-file fan-out).  The
+    fixture-content key matters here: a regenerated fixture must not
+    serve a clustered copy normalized with STALE bounds while the
+    oracle recomputes from the live table (round-14 review finding)."""
 
-    Cache key = _fixture_tag (basename + content fingerprint, the
-    round-7 convention), NOT basename alone — a regenerated fixture or
-    a second dir sharing a basename would otherwise serve a clustered
-    copy normalized with STALE bounds while the oracle recomputes from
-    the live table (round-14 review finding).  The write root honors
-    ``SPARK_GRAFT_LAYOUT_CACHE`` so bench.py's fresh-cache regime can
-    redirect it and pay the rewrite (the build-inclusive contract)."""
-    import os
-
-    from scala_reactivex_spark.operators.llm_extras import _fixture_tag
-
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    root = os.environ.get(
-        "SPARK_GRAFT_LAYOUT_CACHE", os.path.join(repo_root, ".cache")
-    )
-    out = os.path.join(
-        root, f"events_zorder_{_fixture_tag(sf_dir, 'events')}"
-    )
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def write(tmp: str) -> None:
         ev = table(spark, sf_dir, "events").select(
             "event_id",
             "event_type",
@@ -1010,13 +983,9 @@ def _zordered_events(spark: SparkSession, sf_dir: str) -> str:
             F.expr(ZORDER_D8_EXPR).alias("d8"),
         )
         z = n.withColumn("zbucket", F.expr(zbucket_expr()))
-        (
-            z.repartition("zbucket")
-            .write.mode("overwrite")
-            .partitionBy("zbucket")
-            .parquet(out)
-        )
-    return out
+        z.repartition("zbucket").write.partitionBy("zbucket").parquet(tmp)
+
+    return standing_artifact(sf_dir, "events_zorder", write)
 
 
 @register(

@@ -28,6 +28,7 @@ from scala_reactivex_spark.functions.portable_hash import (
     kr31_duck_expr,
     kr31_spark_expr,
 )
+from scala_reactivex_spark.plans.memo import standing_artifact
 from scala_reactivex_spark.plans.registry import register
 from scala_reactivex_spark.sources.catalog import table
 
@@ -1332,42 +1333,16 @@ def _compaction_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _compacted_docs(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (once per fixture content) the EXECUTED compaction
-    layout: every doc routes to its fragment's planned (shard,
-    out_file) and the corpus is rewritten as hive-partitioned parquet,
-    one task per planned output file (``repartition(shard, out_file)``
-    before ``partitionBy`` keeps the writer at one file per planned
-    file — no small-file fan-out, which is the entire point of
-    OPTIMIZE).  Same cache-root + fixture-tag convention as
-    creation._zordered_events: keyed by fixture CONTENT, redirected by
-    SPARK_GRAFT_LAYOUT_CACHE so the bench's fresh regime pays the
-    rewrite.  The cache name carries (a) the TARGET — an
-    env-overridden target (the sf100 probe) must never serve a layout
-    binned at a different one — and (b) this module's BUILDER VERSION
-    token (memo._builder_src_tag), so editing the compaction recipe
-    invalidates the written layout deterministically instead of
-    silently serving the pre-edit one across sessions (the disk_memo
-    r11 convention; round-15 review finding).  Superseded generations
-    of the same fixture are pruned only AFTER a successful write
-    (write-then-prune, ADVICE r15)."""
-    import re
-    import shutil
+    layout as a standing layout: every doc routes to its fragment's
+    planned (shard, out_file) and the corpus is rewritten as
+    hive-partitioned parquet, one task per planned output file
+    (``repartition(shard, out_file)`` before ``partitionBy`` keeps the
+    writer at one file per planned file — no small-file fan-out, which
+    is the entire point of OPTIMIZE).  The layout name carries the
+    TARGET, so an env-overridden target (the sf100 probe) never serves
+    a layout binned at a different one."""
 
-    from scala_reactivex_spark.operators.llm_extras import _fixture_tag
-    from scala_reactivex_spark.plans.memo import _builder_src_tag
-
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    root = os.environ.get(
-        "SPARK_GRAFT_LAYOUT_CACHE", os.path.join(repo_root, ".cache")
-    )
-    tag = _fixture_tag(sf_dir, "documents")
-    out = os.path.join(
-        root,
-        f"docs_compact_{tag}_t{COMPACT_TARGET}"
-        f"_{_builder_src_tag(_compacted_docs)}",
-    )
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def write(tmp: str) -> None:
         assign = _compaction_offsets(spark, sf_dir).select(
             "shard",
             "source",
@@ -1385,29 +1360,13 @@ def _compacted_docs(spark: SparkSession, sf_dir: str) -> str:
             # Fragment table is bounded (shards × sources) — broadcast.
             docs.join(F.broadcast(assign), ["shard", "source"])
             .repartition("shard", "out_file")
-            .write.mode("overwrite")
-            .partitionBy("shard", "out_file")
-            .parquet(out)
+            .write.partitionBy("shard", "out_file")
+            .parquet(tmp)
         )
-        # Prune superseded generations for the SAME fixture tag
-        # (different target or builder version) AFTER the new layout's
-        # _SUCCESS-marked write completes — disk_memo's write-then-
-        # prune order (ADVICE r15: pruning first meant an interrupted
-        # rewrite left NO generation on disk, and a concurrent session
-        # scanning an older generation could have it rmtree'd
-        # mid-scan).  Each generation is a full corpus rewrite, so the
-        # dir still cannot grow without bound.  Segment-shape match,
-        # never a bare prefix test.
-        gen = re.compile(
-            re.escape(f"docs_compact_{tag}_t")
-            + r"\d+(_([0-9a-f]{8}|nosrc000))?"
-        )
-        if os.path.isdir(root):
-            for d in os.listdir(root):
-                full = os.path.join(root, d)
-                if full != out and os.path.isdir(full) and gen.fullmatch(d):
-                    shutil.rmtree(full, ignore_errors=True)
-    return out
+
+    return standing_artifact(
+        sf_dir, f"docs_compact_t{COMPACT_TARGET}", write
+    )
 
 
 @register(

@@ -1,4 +1,5 @@
-"""Session-scoped memoization for expensive shared index builds.
+"""Standing artifacts: session-scoped memoization for shared index
+builds, and the one on-disk writer every standing artifact goes through.
 
 Several graded operators compose the same internal index (the IVF
 centroid assignment feeds ``llm_ann_ivf`` / ``llm_ann_ivf_mp`` /
@@ -10,17 +11,30 @@ invocation into executor storage (round-7 ADVICE on ``llm_semdedup``).
 
 ``session_memo`` builds once per (SparkSession application, fixture
 dir, index name) and returns the same object — typically a tuple of
-DataFrames whose expensive members are persisted exactly once.  This is
-the in-memory twin of the on-disk bucketed-table cache
-(operators/llm_extras._bucketed_table): production would persist the
-index as a table; within one session the persisted lineage IS that
-table.
+DataFrames whose expensive members are persisted exactly once.
 
-Correctness note: memoization keys on a CONTENT FINGERPRINT of the
-fixture directory (size + mtime of every parquet file, the same
-``_fixture_tag`` scheme the on-disk caches use) — so a fixture
-regenerated mid-session misses the cache and rebuilds instead of
-serving stale persisted frames (round-8 ADVICE).
+``standing_artifact`` is the single on-disk writer.  It serves two
+kinds of artifact, each under its own root:
+
+- ``index`` — the parquet tier behind :func:`disk_memo` (root
+  ``SPARK_GRAFT_INDEX_CACHE``, default ``<repo>/spark-warehouse/
+  index_cache``);
+- ``layout`` — rewritten copies of a fixture table (day-partitioned,
+  z-ordered, bucketed, compacted, schema-evolved events; root
+  ``SPARK_GRAFT_LAYOUT_CACHE``, default ``<repo>/.cache``).
+
+Every artifact lives at ``<root>/<name>@<fixture basename>-<fp8>-
+<tag8>``, where ``fp8`` is :func:`_dir_fingerprint` of the fixture dir
+and ``tag8`` is :func:`_builder_src_tag` of the module that writes it.
+It is written into a temp dir, marked ``_COMPLETE`` and renamed into
+place, and only then are superseded generations of the same name and
+fixture pruned.
+
+Correctness note: both tiers key on a CONTENT FINGERPRINT of the
+fixture directory (relative path, size and nanosecond mtime of every
+file) — so a fixture regenerated mid-session misses the cache and
+rebuilds instead of serving stale persisted frames or stale layouts
+(round-8 ADVICE).
 """
 
 from __future__ import annotations
@@ -92,18 +106,25 @@ def session_memo(spark, sf_dir: str, name: str, builder: Callable[[], T]) -> T:
         return _CACHE[key]  # type: ignore[return-value]
 
 
-#: Default root of the parquet-backed index-cache tier.  Lives under the
-#: (gitignored) warehouse dir next to this package's repo root; override
-#: with SPARK_GRAFT_INDEX_CACHE (e.g. a per-test tmp dir, or a shared
-#: filesystem path on a real cluster).
-def _default_cache_root() -> str:
-    env = os.environ.get("SPARK_GRAFT_INDEX_CACHE")
+#: Standing-artifact roots by kind: (env override, default relative to
+#: this package's repo root).  Both defaults are gitignored; override
+#: with a per-test tmp dir, a per-run scratch dir, or a shared
+#: filesystem path on a real cluster.
+_ROOTS = {
+    "index": ("SPARK_GRAFT_INDEX_CACHE", ("spark-warehouse", "index_cache")),
+    "layout": ("SPARK_GRAFT_LAYOUT_CACHE", (".cache",)),
+}
+
+
+def _default_cache_root(kind: str = "index") -> str:
+    env_var, default = _ROOTS[kind]
+    env = os.environ.get(env_var)
     if env:
         return env
     repo = os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
-    return os.path.join(repo, "spark-warehouse", "index_cache")
+    return os.path.join(repo, *default)
 
 
 #: Per-process disk-tier observability: how many disk_memo lookups were
@@ -158,6 +179,84 @@ def _builder_src_tag(builder: Callable) -> str:
     return _SRC_TAGS[path]
 
 
+def standing_artifact(
+    sf_dir: str,
+    name: str,
+    write: Callable[[str], str | None],
+    kind: str = "layout",
+    src: Callable | None = None,
+) -> str:
+    """Return the finished on-disk artifact ``name`` for this fixture,
+    calling ``write(tmp_dir)`` to produce it when no finished copy
+    exists.
+
+    The path is ``<root>/<name>@<fixture basename>-<fp8>-<tag8>``
+    (module docstring); ``tag8`` hashes the file defining ``src``
+    (default: ``write`` itself, so editing a layout's module rewrites
+    the layout).  ``write`` fills ``tmp_dir`` and may return the text of
+    the ``_COMPLETE`` marker; the marker is written last and the temp
+    dir renamed into place, so a crash mid-write never leaves a
+    readable half-artifact.  Superseded generations are pruned only
+    AFTER the rename (write-then-prune, ADVICE r15: pruning first left
+    no generation on disk if the rewrite was interrupted) — scoped to
+    the same fixture basename, so a verify run at sf0.01 cannot evict
+    the bench's sf0.1 artifact."""
+    import shutil
+
+    root = _default_cache_root(kind)
+    scoped = f"{name}@{os.path.basename(os.path.abspath(sf_dir))}"
+    base = os.path.join(
+        root,
+        f"{scoped}-{_dir_fingerprint(sf_dir)}"
+        f"-{_builder_src_tag(src or write)}",
+    )
+    marker = os.path.join(base, "_COMPLETE")
+    if os.path.exists(marker):
+        return base
+    tmp = f"{base}.tmp-{os.getpid()}-{threading.get_ident()}"
+    shutil.rmtree(tmp, ignore_errors=True)  # left by a killed writer
+    try:
+        text = write(tmp)
+        with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
+            f.write(text or "")
+        if not os.path.exists(base):
+            try:
+                os.rename(tmp, base)
+            except OSError:
+                # Concurrent writer won the rename race (EEXIST /
+                # ENOTEMPTY): a valid finished artifact now exists at
+                # base — let the finally-clause discard the losing temp
+                # dir (round-10 ADVICE).
+                if not os.path.exists(marker):
+                    raise
+            else:
+                # Match generations by SEGMENT SHAPE, never a bare
+                # rsplit/prefix test: current format is
+                # {scoped}-{fp8}-{tag8}, legacy (pre-round-12)
+                # {scoped}-{fp8}, where fp8 is 8-hex and tag8 is 8-hex
+                # or the literal 'nosrc000'.  A bare rsplit collided
+                # across fixtures whose basenames contain a dash:
+                # pruning 'idx@fx' must not evict a legacy
+                # 'idx@fx-a-<fp8>' belonging to fixture 'fx-a'
+                # (round-12 ADVICE) — the shape test can't, because 'a'
+                # is not an 8-hex segment.
+                gen = re.compile(
+                    re.escape(scoped)
+                    + r"-[0-9a-f]{8}(-([0-9a-f]{8}|nosrc000))?"
+                )
+                for d in os.listdir(root):
+                    full = os.path.join(root, d)
+                    if (
+                        full != base
+                        and os.path.isdir(full)
+                        and gen.fullmatch(d)
+                    ):
+                        shutil.rmtree(full, ignore_errors=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return base
+
+
 def disk_memo(
     spark,
     sf_dir: str,
@@ -170,26 +269,17 @@ def disk_memo(
     PARQUET-ON-DISK tier keyed by the same fixture-content fingerprint.
 
     First build for a given (fixture content, name) ANYWHERE writes each
-    element of the tuple under ``<cache>/<name>-<fp>/partN`` plus a
-    ``_COMPLETE`` marker (written to a temp dir and renamed, so a crash
-    mid-write never leaves a readable half-index); every later SESSION
-    reads the finished index back instead of re-running the build — a
-    real serving tier's posture, where the IVF/PQ/k-means index is a
-    stored table that survives restarts (round-9 verdict #7).  Builders
-    are deterministic (DECIMAL-exact means, integer pinning), so the
-    read-back frames are value-identical to a fresh build — the
-    correctness hashes cannot move.  Stale generations of the same name
-    (different fingerprint or builder version) are pruned on write —
-    scoped to the SAME fixture directory (the on-disk name carries the
-    dir basename), so a verify run at sf0.01 cannot evict the bench's
-    sf0.1 index or a probe's sf10 one.
-
-    The on-disk name also carries a BUILDER VERSION TOKEN (a hash of
-    the builder's defining source file, :func:`_builder_src_tag`)
-    alongside the fixture fingerprint, so editing a builder's module
-    invalidates its disk tier deterministically instead of silently
-    serving the stale pre-edit index across sessions (round-11
-    ADVICE).
+    element of the tuple as ``partN`` of a ``kind="index"``
+    :func:`standing_artifact`, whose ``_COMPLETE`` marker records the
+    container shape; every later SESSION reads the finished index back
+    instead of re-running the build — a real serving tier's posture,
+    where the IVF/PQ/k-means index is a stored table that survives
+    restarts (round-9 verdict #7).  Builders are deterministic
+    (DECIMAL-exact means, integer pinning), so the read-back frames are
+    value-identical to a fresh build — the correctness hashes cannot
+    move.  The artifact's version token hashes the BUILDER's defining
+    file (round-11 ADVICE), so editing a builder's module invalidates
+    its disk tier.  Hits and misses count in ``DISK_MEMO_STATS``.
 
     ``load_layout`` (round 18): optional ``(part_index, df) -> df``
     applied to each frame on the READ-BACK path before it persists.  A
@@ -203,93 +293,51 @@ def disk_memo(
     aggregates shuffle-free) pass the SAME layout here so read-back
     sessions see the layout the building session had; value-identity is
     untouched (repartitioning never changes rows)."""
-    root = _default_cache_root()
-    scoped = f"{name}@{os.path.basename(os.path.abspath(sf_dir))}"
-    base = os.path.join(
-        root,
-        f"{scoped}-{_dir_fingerprint(sf_dir)}-{_builder_src_tag(builder)}",
-    )
 
     def load_or_build() -> T:
-        marker = os.path.join(base, "_COMPLETE")
-        if os.path.exists(marker):
-            DISK_MEMO_STATS["hits"] += 1
-            # Marker records the builder's CONTAINER SHAPE ("tuple:N",
-            # "list:N", "scalar:1") so a (df,) builder round-trips as a
-            # 1-tuple and a list as a list across sessions, identical
-            # to what the building session returned (round-10 ADVICE).
-            shape, _, n_str = open(marker).read().partition(":")
-            n = int(n_str)
-            frames = []
-            for i in range(n):
-                df = spark.read.parquet(os.path.join(base, f"part{i}"))
-                if load_layout is not None:
-                    df = load_layout(i, df)
-                df = df.persist()
-                df.count()
-                frames.append(df)
-            if shape == "tuple":
-                return tuple(frames)  # type: ignore[return-value]
-            if shape == "list":
-                return frames  # type: ignore[return-value]
-            return frames[0]  # type: ignore[return-value]
-        DISK_MEMO_STATS["misses"] += 1
-        val = builder()
-        items = tuple(val) if isinstance(val, (tuple, list)) else (val,)
-        shape = (
-            "tuple"
-            if isinstance(val, tuple)
-            else "list" if isinstance(val, list) else "scalar"
-        )
-        import shutil
+        built: list = []
 
-        tmp = f"{base}.tmp-{os.getpid()}"
-        try:
+        def write(tmp: str) -> str:
+            DISK_MEMO_STATS["misses"] += 1
+            val = builder()
+            items = tuple(val) if isinstance(val, (tuple, list)) else (val,)
             for i, df in enumerate(items):
                 df.write.mode("overwrite").parquet(
                     os.path.join(tmp, f"part{i}")
                 )
-            with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
-                f.write(f"{shape}:{len(items)}")
-            if not os.path.exists(base):
-                try:
-                    os.rename(tmp, base)
-                except OSError:
-                    # Concurrent writer won the rename race (EEXIST /
-                    # ENOTEMPTY): a valid finished index now exists at
-                    # base — serve our freshly-built value and let the
-                    # finally-clause discard the losing temp dir
-                    # (round-10 ADVICE).
-                    if not os.path.exists(marker):
-                        raise
-                else:
-                    # Prune superseded generations (regenerated
-                    # fixture) so the cache dir does not grow without
-                    # bound.  Match by SEGMENT SHAPE, never a bare
-                    # rsplit/prefix test: new format is
-                    # {scoped}-{fp8}-{tag8}, legacy (pre-round-12)
-                    # {scoped}-{fp8}, where fp8 is 8-hex and tag8 is
-                    # 8-hex or the literal 'nosrc000'.  A bare rsplit
-                    # collided across fixtures whose basenames contain
-                    # a dash: pruning 'idx@fx' must not evict a legacy
-                    # 'idx@fx-a-<fp8>' belonging to fixture 'fx-a'
-                    # (round-12 ADVICE) — the shape test can't, because
-                    # 'a' is not an 8-hex segment.
-                    gen = re.compile(
-                        re.escape(scoped)
-                        + r"-[0-9a-f]{8}(-([0-9a-f]{8}|nosrc000))?"
-                    )
-                    for d in os.listdir(root):
-                        full = os.path.join(root, d)
-                        if (
-                            full != base
-                            and os.path.isdir(full)
-                            and gen.fullmatch(d)
-                        ):
-                            shutil.rmtree(full, ignore_errors=True)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-        return val
+            built.append(val)
+            # Marker records the builder's CONTAINER SHAPE ("tuple:N",
+            # "list:N", "scalar:1") so a (df,) builder round-trips as a
+            # 1-tuple and a list as a list across sessions, identical
+            # to what the building session returned (round-10 ADVICE).
+            shape = (
+                "tuple"
+                if isinstance(val, tuple)
+                else "list" if isinstance(val, list) else "scalar"
+            )
+            return f"{shape}:{len(items)}"
+
+        base = standing_artifact(sf_dir, name, write, "index", src=builder)
+        if built:
+            # This session built it (or lost the rename race to an
+            # identical concurrent build): serve the built value.
+            return built[0]
+        DISK_MEMO_STATS["hits"] += 1
+        with open(os.path.join(base, "_COMPLETE")) as f:
+            shape, _, n_str = f.read().partition(":")
+        frames = []
+        for i in range(int(n_str)):
+            df = spark.read.parquet(os.path.join(base, f"part{i}"))
+            if load_layout is not None:
+                df = load_layout(i, df)
+            df = df.persist()
+            df.count()
+            frames.append(df)
+        if shape == "tuple":
+            return tuple(frames)  # type: ignore[return-value]
+        if shape == "list":
+            return frames  # type: ignore[return-value]
+        return frames[0]  # type: ignore[return-value]
 
     ran = {"load_or_build": False}
 

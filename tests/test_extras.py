@@ -7,6 +7,9 @@ shuffle-free on the join keys.
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from scala_reactivex_spark.operators.llm_extras import (
@@ -584,49 +587,96 @@ def test_twin_ann_pq_crash_restart_replay(spark, sf_dir, tmp_path):
     assert not any(p >= 900 for p, *_ in got)
 
 
+def _bucketed_lineitem_path(spark, sf_dir):
+    from urllib.parse import urlparse
+
+    from scala_reactivex_spark.operators.llm_extras import _bucketed_table
+
+    df = _bucketed_table(spark, sf_dir, "lineitem", "l_orderkey")
+    return os.path.dirname(urlparse(df.inputFiles()[0]).path)
+
+
+def _layout_writer(name):
+    """(writer returning the layout path, fixture tables it reads)."""
+    from scala_reactivex_spark.operators import (
+        creation,
+        llm_extras,
+        llm_pipeline,
+    )
+
+    return {
+        "partitioned": (creation._partitioned_events, ("events",)),
+        "zordered": (creation._zordered_events, ("events",)),
+        "evolved": (llm_extras._evolved_events, ("events",)),
+        "compacted": (llm_pipeline._compacted_docs, ("documents",)),
+        "bucketed": (_bucketed_lineitem_path, ("lineitem",)),
+    }[name]
+
+
+@pytest.mark.parametrize(
+    "writer", ["partitioned", "zordered", "evolved", "compacted", "bucketed"]
+)
 def test_fixture_cache_rebuilds_when_fixture_regenerated(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch, writer
 ):
-    """A REGENERATED fixture must miss the on-disk derived caches: the
-    cache key carries a content fingerprint (size + mtime), so rewriting
-    the source parquet keys a fresh materialization instead of silently
-    serving stale rows into the graded src_bucketed_join /
-    src_schema_evolution (round-8 verdict's only live correctness
-    risk)."""
-    import os
+    """A REGENERATED fixture must miss every on-disk layout: the key
+    carries the fixture dir's content fingerprint, so rewriting the
+    source parquet keys a fresh materialization instead of silently
+    serving stale rows into the graded layout queries (round-8
+    verdict's only live correctness risk).  Every layout honors
+    SPARK_GRAFT_LAYOUT_CACHE — nothing lands under the checkout's
+    .cache — and the superseded generation is pruned once the fresh
+    one is written."""
     import shutil
     import time
 
-    from scala_reactivex_spark.operators.llm_extras import (
-        _evolved_events,
-        _fixture_tag,
+    from scala_reactivex_spark.plans.memo import _dir_fingerprint
+
+    repo_cache = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        ".cache",
     )
 
+    def listing():
+        return {
+            os.path.join(r, f)
+            for r, ds, fs in os.walk(repo_cache)
+            for f in ds + fs
+        }
+
+    before = listing()
+    root = tmp_path / "layouts"
+    monkeypatch.setenv("SPARK_GRAFT_LAYOUT_CACHE", str(root))
+    write, tables = _layout_writer(writer)
     fix = tmp_path / "fixcopy"
     fix.mkdir()
-    src = os.path.join(sf_dir, "events.parquet")
-    dst = str(fix / "events.parquet")
-    (shutil.copytree if os.path.isdir(src) else shutil.copyfile)(src, dst)
+    for tbl in tables:
+        src = os.path.join(sf_dir, f"{tbl}.parquet")
+        dst = str(fix / f"{tbl}.parquet")
+        (shutil.copytree if os.path.isdir(src) else shutil.copyfile)(
+            src, dst
+        )
 
-    tag1 = _fixture_tag(str(fix), "events")
-    out1 = _evolved_events(spark, str(fix))
-    assert os.path.exists(os.path.join(out1, "_DONE"))
+    fp1 = _dir_fingerprint(str(fix))
+    out1 = write(spark, str(fix))
+    assert out1.startswith(str(root) + os.sep)
+    assert os.path.exists(os.path.join(out1, "_COMPLETE"))
 
     # Regenerate: same path, same bytes, NEW mtime — exactly the
     # stale-cache shape a re-run of the fixture generator produces.
     new_mtime = time.time() + 10
-    if os.path.isdir(dst):
-        for root_, _dirs, files in os.walk(dst):
-            for fn in files:
-                os.utime(os.path.join(root_, fn), (new_mtime, new_mtime))
-    else:
-        os.utime(dst, (new_mtime, new_mtime))
+    for root_, _dirs, files in os.walk(fix):
+        for fn in files:
+            os.utime(os.path.join(root_, fn), (new_mtime, new_mtime))
 
-    tag2 = _fixture_tag(str(fix), "events")
-    assert tag2 != tag1, "fingerprint must change when the fixture does"
-    out2 = _evolved_events(spark, str(fix))
-    assert out2 != out1, "regenerated fixture must key a fresh cache"
-    assert os.path.exists(os.path.join(out2, "_DONE"))
+    assert _dir_fingerprint(str(fix)) != fp1, (
+        "fingerprint must change when the fixture does"
+    )
+    out2 = write(spark, str(fix))
+    assert out2 != out1, "regenerated fixture must key a fresh layout"
+    assert os.path.exists(os.path.join(out2, "_COMPLETE"))
+    assert not os.path.exists(out1), "superseded generation not pruned"
+    assert listing() == before, "layout written under the repo's .cache"
 
 
 def test_twin_ann_spann_serving_equals_batch(spark, sf_dir, tmp_path):
