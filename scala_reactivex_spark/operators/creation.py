@@ -25,7 +25,7 @@ from scala_reactivex_spark.functions.portable_hash import (
 )
 from scala_reactivex_spark.plans.memo import standing_artifact
 from scala_reactivex_spark.plans.registry import register
-from scala_reactivex_spark.sources.catalog import table
+from scala_reactivex_spark.sources.catalog import read_parquet, table
 
 
 @register(
@@ -172,8 +172,7 @@ GROUP BY day(ts), event_type
 def src_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scala_reactivex_spark.functions.determinism import dsum
 
-    path = _partitioned_events(spark, sf_dir)
-    ev = spark.read.parquet(path)
+    ev = read_parquet(spark, _partitioned_events(spark, sf_dir))
     return (
         ev.where(F.col("dom") <= 7)
         .groupBy(F.col("dom").cast("bigint").alias("dom"), "event_type")
@@ -1035,7 +1034,7 @@ def src_zorder_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from scala_reactivex_spark.functions.determinism import dsum
 
     lo, hi = ZREAD_BOX
-    ev = spark.read.parquet(_zordered_events(spark, sf_dir))
+    ev = read_parquet(spark, _zordered_events(spark, sf_dir))
     return (
         ev.where(F.col("zbucket").isin(_zread_buckets()))
         .where(F.col("u8").between(lo, hi) & F.col("d8").between(lo, hi))

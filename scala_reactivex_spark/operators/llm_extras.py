@@ -555,6 +555,8 @@ FROM unioned GROUP BY 1
 )
 def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _evolved_events(spark, sf_dir)
+    # Not routed through catalog.read_parquet: the mergeSchema footer
+    # read IS the operator under test, so it must run on every call.
     ev = (
         spark.read.option("mergeSchema", "true")
         .option("recursiveFileLookup", "false")

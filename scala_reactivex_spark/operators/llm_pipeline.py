@@ -30,7 +30,7 @@ from scala_reactivex_spark.functions.portable_hash import (
 )
 from scala_reactivex_spark.plans.memo import standing_artifact
 from scala_reactivex_spark.plans.registry import register
-from scala_reactivex_spark.sources.catalog import table
+from scala_reactivex_spark.sources.catalog import read_parquet, table
 
 CONTEXT_TOKENS = 256  # pack budget (fixture docs are ~40-80 tokens)
 
@@ -1412,7 +1412,7 @@ FROM offs GROUP BY 1, 2
 """,
 )
 def llm_compaction_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    layout = spark.read.parquet(_compacted_docs(spark, sf_dir))
+    layout = read_parquet(spark, _compacted_docs(spark, sf_dir))
     # input_file_name() is non-deterministic to the analyzer — project
     # it BEFORE the aggregate (it is stable per scanned row).
     rows = layout.select(

@@ -15,16 +15,37 @@ downstream sees the same deterministic columns:
 - ``ms``   bigint — millisecond truncation (``ts div 1_000_000``), the ONLY
   time representation ever emitted in query output (≡ DuckDB ``epoch_ms``).
 
+Schema resolution (:func:`read_parquet`): Spark infers a parquet
+schema by launching a one-task job that reads the footer, and a fixture's
+schema never changes between reads.  So each path's schema is inferred
+once and every later read passes it in (``spark.read.schema(s)``), which
+launches no job.  The cache key is the absolute path plus the values of
+the SQL confs that change what a footer reads as (``_SCHEMA_CONFS``:
+``nanosAsLong``, ``binaryAsString``, ``int96AsTimestamp``,
+``inferTimestampNTZ.enabled``).  The stored value is a
+content fingerprint plus the schema: size and ``st_mtime_ns`` for a
+file, ``memo._dir_fingerprint`` for a directory.  A regenerated fixture
+has a new fingerprint, so it is inferred again and replaces the old
+entry; the cache holds one entry per path and conf set and is never
+stale.  Paths that are not local (object-store URIs) are inferred on
+every read.  Whole DataFrames are NOT cached: two reads of
+one table must keep distinct attribute IDs, or a self-join such as
+``a.x == b.y`` becomes ambiguous.
+
 Scale note: at 100 TB the same loader works over partitioned datasets —
-reads are plain ``spark.read.parquet`` so partition pruning / predicate
-pushdown apply; no collect, no schema inference pass.
+reads are plain parquet scans, so partition pruning / predicate pushdown
+apply; no collect, and at most one schema inference per file content.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from scala_reactivex_spark.plans.memo import _dir_fingerprint
 from scala_reactivex_spark.session import configure_session
 
 TABLES = (
@@ -49,12 +70,65 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     configure_session(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = _parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
     if name == "events":
-        df = _normalize_events(df)
+        df = _normalize_events(df, schema)
     elif name in _DATE_COLS:
-        df = _normalize_dates(df, _DATE_COLS[name])
+        df = _normalize_dates(df, schema, _DATE_COLS[name])
     return df
+
+
+#: SQL confs that change the schema a parquet footer reads as; their
+#: values are part of the schema cache key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: (absolute path, conf values) -> (content fingerprint, schema).  A
+#: racing pair of first reads may both infer and store the same entry;
+#: that costs one extra footer job and is otherwise harmless.
+_SCHEMAS: dict[tuple[str, tuple[str, ...]], tuple[str, StructType]] = {}
+
+
+def _content_fingerprint(path: str) -> str:
+    if os.path.isdir(path):
+        return _dir_fingerprint(path)
+    st = os.stat(path)
+    return f"{st.st_size}:{st.st_mtime_ns}"
+
+
+def _parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The parquet schema of ``path`` under the session's current confs,
+    inferred once per file content (module docstring)."""
+    if not os.path.exists(path):
+        # Not a local path: nothing to fingerprint, so never cache.
+        return spark.read.parquet(path).schema
+    key = (
+        os.path.abspath(path),
+        tuple(str(spark.conf.get(k)) for k in _SCHEMA_CONFS),
+    )
+    # Fingerprint BEFORE inferring: a file rewritten in between is
+    # stored under its old fingerprint and re-inferred on the next read.
+    fp = _content_fingerprint(path)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[key] = (fp, schema)
+    return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema passed in from
+    :func:`_parquet_schema`, so only the first read of a file content
+    launches a footer job.  Each call is a fresh relation with its own
+    attribute IDs."""
+    return spark.read.schema(_parquet_schema(spark, path)).parquet(path)
 
 
 #: Date-valued columns whose parquet type has changed between fixture
@@ -67,17 +141,27 @@ _DATE_COLS = {
 }
 
 
-def _normalize_dates(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
+def _simple_types(schema: StructType) -> dict[str, str]:
+    return {f.name: f.dataType.simpleString() for f in schema.fields}
+
+
+def _normalize_dates(
+    df: DataFrame, schema: StructType, cols: tuple[str, ...]
+) -> DataFrame:
     """Cast each date-ish column to timestamp_ntz (midnight for DATE,
-    same wall clock for TIMESTAMP under the UTC session timezone)."""
-    dtypes = dict(df.dtypes)
-    for c in cols:
-        if dtypes.get(c) != "timestamp_ntz":
-            df = df.withColumn(c, F.col(c).cast("timestamp_ntz"))
-    return df
+    same wall clock for TIMESTAMP under the UTC session timezone).
+    ``schema`` is ``df``'s schema, passed in so the decision costs no
+    analysis round trip."""
+    dtypes = _simple_types(schema)
+    casts = {
+        c: F.col(c).cast("timestamp_ntz")
+        for c in cols
+        if dtypes.get(c) != "timestamp_ntz"
+    }
+    return df.withColumns(casts) if casts else df
 
 
-def _normalize_events(df: DataFrame) -> DataFrame:
+def _normalize_events(df: DataFrame, schema: StructType) -> DataFrame:
     """Derive the canonical (ts bigint-ns, tsm timestamp, ms bigint) columns.
 
     Fixture generations differ in the parquet type of ``ts``: TIMESTAMP(NANOS)
@@ -87,19 +171,18 @@ def _normalize_events(df: DataFrame) -> DataFrame:
     streaming twins' BIGINT state schemas) sees one representation.  The
     NTZ→instant cast happens under the UTC session timezone
     (configure_session), matching DuckDB's naive-timestamp ``epoch_ms``.
+    ``schema`` is ``df``'s schema; all derived columns are one projection.
     """
-    if dict(df.dtypes)["ts"] != "bigint":
-        df = df.withColumn(
-            "ts",
-            (F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000)).cast(
-                "bigint"
-            ),
-        )
+    ts = "ts"
+    cols = {}
+    if _simple_types(schema)["ts"] != "bigint":
+        ts = "CAST(unix_micros(CAST(ts AS TIMESTAMP)) * 1000 AS BIGINT)"
+        cols["ts"] = F.expr(ts)
     # Integer division keeps the full int64 — ns values (~1.7e18) exceed
     # double's 53-bit mantissa, so a float path would corrupt timestamps.
-    return df.withColumn(
-        "tsm", F.timestamp_micros(F.expr("ts div 1000"))
-    ).withColumn("ms", F.expr("ts div 1000000"))
+    cols["tsm"] = F.expr(f"timestamp_micros(({ts}) div 1000)")
+    cols["ms"] = F.expr(f"({ts}) div 1000000")
+    return df.withColumns(cols)
 
 
 def widen_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
@@ -209,9 +292,9 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view (canonical derived
     columns included), so users can drive the engine with raw
     ``spark.sql`` — the same table names the DuckDB oracles use.  Views
-    are lazy: registration costs one footer read per table, and Catalyst
-    still pushes filters/prunes columns through them (asserted in
-    tests/test_api.py)."""
+    are lazy: registration costs at most one footer read per table (none
+    once the schemas are resolved), and Catalyst still pushes
+    filters/prunes columns through them (asserted in tests/test_api.py)."""
     for name in TABLES:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 

@@ -45,22 +45,26 @@ def events_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     source streams a directory).  ``maxFilesPerTrigger`` is the
     backpressure knob — the micro-batch analogue of ``request(n)``.
 
-    The stream schema is sniffed from the parquet footers via a one-off
-    batch read (file sources require a static schema), then ``ts`` is
+    The stream schema is sniffed from the parquet footers by the
+    catalog's schema resolver (file sources require a static schema; the
+    footer job runs once per directory content), then ``ts`` is
     normalized to the engine's bigint-nanosecond contract exactly as in
     the batch catalog — so the twins' BIGINT state schemas hold across
     fixture generations (TIMESTAMP NANOS-as-long vs MICROS).
     """
     configure_session(spark)
-    from scala_reactivex_spark.sources.catalog import _normalize_events
+    from scala_reactivex_spark.sources.catalog import (
+        _normalize_events,
+        _parquet_schema,
+    )
 
-    batch_schema = spark.read.parquet(source_dir).schema
+    batch_schema = _parquet_schema(spark, source_dir)
     sdf = (
         spark.readStream.schema(batch_schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
     )
-    return _normalize_events(sdf)
+    return _normalize_events(sdf, batch_schema)
 
 
 # --- windowed twins (watermark + native window expressions) ---
